@@ -1,7 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.text.TextAnalysis
 
 /** Deduplication operators for LLM training corpora.
@@ -588,121 +592,138 @@ object Dedup {
 
   // ---------------- duplicate clustering (connected components) ----------------
 
+  /** The size gate of [[connectedComponents]] and [[deltaComponents]]: at
+    * most this many canonical edges or delta pairs (100k ≈ 1.6 MB, the
+    * broadcast build-side size class) are solved on the driver, where the
+    * fixpoint's per-round cost is scheduling, not data (`9751d13`: q228
+    * 22.6 → 7.9 s, q185 8.4 → 2.0 s; `f795730`: the q228 fold 7.6 → 2.5 s).
+    * Tests reach the distributed side through the `cap` overloads. */
+  private[graft] val DriverCap = 100000
+
+  /** Min-rooted, path-compressing union-find: the smaller root wins every
+    * union, so each root IS its component's minimum id — the label the
+    * distributed fixpoint converges to. */
+  private final class UnionFind {
+    private val parent = new scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      if (!parent.contains(x)) parent.update(x, x)
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent.update(c, r); c = n }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent.update(rb, ra) else if (rb < ra) parent.update(ra, rb)
+    }
+    /** (id, component minimum) for every id seen, ascending by id. */
+    def labels: Array[(Long, Long)] =
+      parent.keys.toArray.sorted.map(x => (x, find(x)))
+  }
+
+  /** The input contract of both entry points: id columns must already be
+    * integral (byte/short/int/long). A silent cast from string/double
+    * would turn un-castable ids into NULLs and drop their edges; callers
+    * with string ids hash or dictionary-encode them first and get an
+    * error here, not a quietly wrong clustering. */
+  private def requireIntegral(op: String, df: DataFrame, cols: String*): Unit =
+    cols.foreach { c =>
+      val dt = df.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"$op: id column '$c' must be an integral type, got $dt " +
+          "(hash or dictionary-encode string ids first)")
+    }
+
+  /** The output contract of both sides of the gate: non-null long ids
+    * (inputs are cast to long). Null endpoints never pass the self-pair
+    * filter, so only a null standing-map id could reach the output, and it
+    * fails here; nullability no longer depends on the side that ran. */
+  private def nonNullIds(df: DataFrame): DataFrame =
+    df.select(df.columns.toSeq.map(c =>
+      bridge.column(AssertNotNull(bridge.expression(col(c)))).as(c)): _*)
+
+  /** Land `df` lazily and probe it with ONE `limit(cap + 1)` collect: at
+    * most `cap` rows come back as Left(rows) from the job that decided the
+    * gate; over the cap, Right(landed) reuses the blocks the probe's job
+    * materialized, so the distributed path never recomputes `df`'s plan.
+    * A local relation is already on the driver and probes without a job. */
+  private def gate(df: DataFrame, cap: Int): Either[Array[Row], DataFrame] = {
+    val landed = df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df
+      case _ => df.localCheckpoint(false)
+    }
+    val rows = landed.limit(cap + 1).collect()
+    if (rows.length <= cap) Left(rows) else Right(landed)
+  }
+
   /** Connected components over an undirected pair list — the operator that
     * turns near-duplicate PAIRS into duplicate CLUSTERS (transitive
     * closure), making "keep one per cluster" principled: pair-wise removal
     * either drops both endpoints of a chain a–b–c or keeps near-dups whose
     * only witness was a removed middle document.
     *
-    * Alternating large-star/small-star (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14). Each round is two
-    * min-aggregations + two joins; NO per-node neighbor list is ever
-    * materialized, so the hot center of a 10⁶-member boilerplate cluster
-    * costs one min() group, not a 10⁶-element array on one row. The edge
-    * set converges to per-component stars centered on the component minimum
-    * in O(log n) rounds regardless of graph diameter (min-label propagation
-    * needs O(diameter) rounds — a pathological dup chain kills it).
-    * Lineage is truncated eagerly per round (see `checkpointDir` below);
-    * iterative DataFrame plans otherwise grow without bound. Convergence is
-    * detected by a (count, xor-of-xxhash64) edge-set signature — one tiny
-    * aggregate per round against the checkpointed edges; a false positive
-    * needs a 64-bit xor collision on top of an identical edge count.
+    * Input rows are (aCol, bCol) node pairs with integral ids; self-pairs
+    * are dropped. At most [[DriverCap]] canonical (u < v) edges are solved
+    * by the [[UnionFind]] and returned as a local relation; larger edge
+    * sets run the distributed [[fixpoint]]. Both yield component minima,
+    * and the PipelineSpec identity specs pin rows and schema across the
+    * gate. The gate is a measured row count, never local mode.
     *
-    * Input rows are (aCol, bCol) node pairs; self-pairs are dropped. The
-    * id columns must already be integral (byte/short/int/long): a silent
-    * cast from string/double would turn un-castable ids into NULLs and
-    * drop their edges — callers with string ids should hash or
-    * dictionary-encode them first and get an error here, not a quietly
-    * wrong clustering.
+    * `checkpointDir`: the fixpoint truncates lineage every round, by
+    * default with executor-local `localCheckpoint` blocks, which die with
+    * their executor on a real cluster. A reliable location (HDFS/object
+    * store) switches to `checkpoint()` (set on the SparkContext if none is
+    * configured); such callers always run distributed, after a limit-1
+    * emptiness probe.
     *
-    * `checkpointDir`: lineage must be truncated every round or iterative
-    * DataFrame plans grow without bound. By default the truncation is an
-    * eager `localCheckpoint` — executor-local blocks, correct locally and
-    * cheapest, but on a real cluster they die with their executor and a
-    * 50-round job would restart from nothing. Pass a reliable location
-    * (HDFS/object store) to use `checkpoint()` instead; the dir is set on
-    * the SparkContext if none is configured yet.
-    *
-    * Answer-sized inputs (at most `graft.cc.driverEdgeCap` distinct
-    * canonical edges, default 100k ≈ 1.6 MB — well inside the broadcast
-    * build-side contract) skip the fixpoint: the edge set is collected,
-    * solved with a min-rooted union-find, and returned as a local
-    * relation. Identical labels by construction (both paths converge to
-    * component minima; the random-graph spec pins the identity), and the
-    * per-round scheduling floor — the whole cost at delta/rep-graph
-    * sizes — vanishes. The gate is a measured row count, so a 100 TB
-    * corpus-wide pair graph takes the distributed fixpoint unchanged.
-    *
-    * Returns (id, cluster_id) — one row per node appearing in `pairs`,
-    * cluster_id = the minimum id of the node's component. */
+    * Returns (id, cluster_id), non-null longs — one row per node
+    * appearing in `pairs`, cluster_id = the minimum id of the node's
+    * component. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    Seq(aCol, bCol).foreach { c =>
-      import org.apache.spark.sql.types._
-      val dt = pairs.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"connectedComponents: id column '$c' must be an integral type, got $dt " +
-          "(hash or dictionary-encode string ids first)")
-    }
-    val sc = pairs.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-    }
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val empty = {
-      val s = pairs.sparkSession
-      import s.implicits._
-      Seq.empty[(Long, Long)].toDF("id", "cluster_id")
-    }
-    // canonical u < v edges
-    var edges = truncate(pairs
+      maxRounds: Int = 50, checkpointDir: Option[String] = None): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxRounds, checkpointDir, DriverCap)
+
+  /** [[connectedComponents]] gated at `cap`; 0 forces the fixpoint. */
+  private[graft] def connectedComponents(pairs: DataFrame, aCol: String,
+      bCol: String, maxRounds: Int, checkpointDir: Option[String],
+      cap: Int): DataFrame = {
+    requireIntegral("connectedComponents", pairs, aCol, bCol)
+    val s = pairs.sparkSession
+    import s.implicits._
+    val canonical = pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct())
-    val nEdges = edges.count() // one cheap job over the eager checkpoint
-    if (nEdges == 0) return empty
-
-    // ANSWER-SIZED PATH (guide §2.4/§3.1): at or below the cap the edge
-    // set is collected and solved with a min-rooted union-find — exactly
-    // the size contract of a broadcast hash join's build side (the
-    // deltaComponents fold already broadcasts these same tables), and the
-    // result re-enters the plan as a local relation downstream joins
-    // broadcast. The distributed fixpoint below is unchanged and remains
-    // the over-cap path (a corpus-wide pair graph at 100 TB); delta/rep
-    // graphs are answer-sized BY CONTRACT at any scale, and for them the
-    // fixpoint's per-round cost is pure scheduling (~5 exchanges + an AQE
-    // re-plan per round — StreamCcProbe), not data. Gated on a MEASURED
-    // count, never on local mode; reliable-checkpoint callers always run
-    // distributed (they asked for durable per-round artifacts).
-    val driverCap = pairs.sparkSession.conf
-      .get("graft.cc.driverEdgeCap", "100000").toLong
-    if (checkpointDir.isEmpty && nEdges <= driverCap) {
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent.update(c, r); c = n }
-        r
-      }
-      edges.collect().foreach { row =>
-        val u = row.getLong(0); val v = row.getLong(1)
-        if (!parent.contains(u)) parent.update(u, u)
-        if (!parent.contains(v)) parent.update(v, v)
-        val ru = find(u); val rv = find(v)
-        // the smaller root wins every union, so by induction each tree's
-        // root IS the minimum id of its members — cluster_id = find(id)
-        if (ru < rv) parent.update(rv, ru)
-        else if (rv < ru) parent.update(ru, rv)
-      }
-      val s = pairs.sparkSession
-      import s.implicits._
-      return parent.keys.toArray.sorted.toSeq
-        .map(id => (id, find(id))).toDF("id", "cluster_id")
+      .distinct()
+    val landed = checkpointDir match {
+      case Some(d) =>
+        if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
+        val edges = canonical.checkpoint(true)
+        if (edges.isEmpty) Left(Array.empty[Row]) else Right(edges)
+      case None => gate(canonical, cap)
     }
+    nonNullIds(landed match {
+      case Left(rows) =>
+        val uf = new UnionFind
+        rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+        uf.labels.toSeq.toDF("id", "cluster_id")
+      case Right(edges) => fixpoint(edges, maxRounds, checkpointDir.isDefined)
+    })
+  }
 
+  /** The distributed side of [[connectedComponents]] over a landed,
+    * non-empty canonical edge set: alternating large-star/small-star
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14). Each round is two min-aggregations + two joins; NO
+    * per-node neighbor list is materialized, so the hot center of a
+    * 10⁶-member boilerplate cluster costs one min() group. The edges
+    * converge to stars centered on component minima in O(log n) rounds
+    * regardless of diameter (label propagation needs O(diameter) — a
+    * dup chain kills it). Convergence = an unchanged (count,
+    * xor-of-xxhash64) edge-set signature, one tiny aggregate per round. */
+  private def fixpoint(landed: DataFrame, maxRounds: Int,
+      reliable: Boolean): DataFrame = {
     def bothDirs(e: DataFrame) =
       e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
 
@@ -711,8 +732,8 @@ object Dedup {
     // m ≤ u < v, smallStar emits m < v and m < u): bothDirs(e)'s
     // `v > u` half IS e and its `v < u` half IS flip(e), so the join
     // probe sides ship |e| rows instead of 2|e| and the post-join
-    // direction filters vanish (CcCostProbe: −18/−25% on the 200k-edge
-    // and answer-sized loads, output-identity asserted). Only the
+    // direction filters vanish (`ae450c9`: −18/−25% on the 200k-edge
+    // and answer-sized loads, output identity asserted). Only the
     // min-neighbor aggregate still reads both directions.
 
     // large-star: every neighbor v > u re-links to m = min(Γ(u) ∪ {u}).
@@ -735,21 +756,17 @@ object Dedup {
         .distinct()
     }
 
-    // Per-round truncation is LAZY (localCheckpoint(false)): the
-    // convergence-signature aggregate that immediately follows is a
-    // full scan, so ONE job materializes the round's blocks AND reads
-    // the signature — the eager form paid a separate materialization
-    // job per round (pure fixed latency on answer-sized graphs, where
-    // scheduling, not data, is the round cost). The reliable-checkpoint
-    // path stays eager (checkpoint(false) would re-execute the round's
-    // plan twice: reliable checkpoints write out by a re-run, they
-    // don't cache).
-    def truncateLazy(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(false)
+    // Per-round truncation is LAZY: the signature aggregate that follows
+    // is a full scan, so ONE job materializes the round's blocks AND
+    // reads the signature. The reliable-checkpoint path stays eager
+    // (a lazy reliable checkpoint writes out by re-running the plan).
+    def truncate(df: DataFrame): DataFrame =
+      if (reliable) df.checkpoint(true) else df.localCheckpoint(false)
+    var edges = landed
     var sig: (Long, Long) = null
     var round = 0
     while (round < maxRounds) {
-      val next = truncateLazy(smallStar(largeStar(edges)))
+      val next = truncate(smallStar(largeStar(edges)))
       val row = next.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       val nextSig = (row.getLong(0), row.getLong(1))
       edges = next
@@ -770,107 +787,91 @@ object Dedup {
     * connects them, and every standing component is already summarized
     * by its representative — so it suffices to (1) map the delta pairs'
     * endpoints to their standing reps (nodes the map has never seen are
-    * their own rep), (2) run the fixpoint over the DELTA-SIZED rep
+    * their own rep), (2) solve components over the DELTA-SIZED rep
     * graph, and (3) relabel. Exactness: a standing rep is its
     * component's minimum node id, and a fresh node's rep is itself, so
     * the min over merged reps IS the min over the union component's
     * members — the incremental labels equal a full recompute's, node
     * for node (the oracle checks precisely that identity).
     *
-    * Scale shape: the standing map is touched by exactly two scans and
-    * ZERO exchanges (a broadcast-semi probe for the endpoints' reps —
-    * the q197 visited-index discipline — and one relabel scan joined
-    * against the broadcast answer-sized merge table); the fixpoint runs
-    * over the rep graph, bounded by the DELTA's pair count, never the
-    * corpus's. Delta pairs internal to one standing component collapse
-    * to self-loops and cost nothing.
+    * Ids of `standingMap` (id, cluster_id) and `deltaPairs` (id_a, id_b)
+    * must be integral, as for [[connectedComponents]]. At most
+    * [[DriverCap]] delta pairs fold on the driver, larger deltas (and
+    * reliable-checkpoint callers) fold distributed. Either way the
+    * standing map is touched by ONE broadcast-semi probe scan (the q197
+    * visited-index discipline) and ONE relabel scan against the broadcast
+    * merge table — never shuffled, never collected.
     *
-    * Returns (node, old_rep, new_rep) for every node whose label
-    * CHANGES: members of standing components that merged, plus fresh
-    * nodes attaching to anything smaller than themselves (their old_rep
-    * is themselves). Apply with a keyed upsert into the standing map;
-    * unchanged nodes never ship. */
+    * Returns (node, old_rep, new_rep), non-null longs, for every node
+    * whose label CHANGES: members of standing components that merged,
+    * plus fresh nodes attaching to anything smaller than themselves
+    * (their old_rep is themselves). Apply with a keyed upsert into the
+    * standing map; unchanged nodes never ship. */
   def deltaComponents(standingMap: DataFrame, deltaPairs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sm = standingMap.select(col("id"), col("cluster_id"))
-    val pairs0 = deltaPairs.select(col("id_a"), col("id_b"))
+      checkpointDir: Option[String] = None): DataFrame =
+    deltaComponents(standingMap, deltaPairs, checkpointDir, DriverCap)
+
+  /** [[deltaComponents]] gated at `cap`; 0 forces the distributed fold. */
+  private[graft] def deltaComponents(standingMap: DataFrame,
+      deltaPairs: DataFrame, checkpointDir: Option[String],
+      cap: Int): DataFrame = {
+    requireIntegral("deltaComponents", standingMap, "id", "cluster_id")
+    requireIntegral("deltaComponents", deltaPairs, "id_a", "id_b")
+    val sm = standingMap.select(col("id").cast("long").as("id"),
+      col("cluster_id").cast("long").as("cluster_id"))
+    val pairs = deltaPairs.select(col("id_a").cast("long").as("id_a"),
+        col("id_b").cast("long").as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
+    nonNullIds(
+      if (checkpointDir.isDefined)
+        foldDistributed(sm, pairs.localCheckpoint(false), checkpointDir, cap)
+      else gate(pairs, cap) match {
+        case Left(rows) => foldOnDriver(sm, rows)
+        case Right(landed) => foldDistributed(sm, landed, checkpointDir, cap)
+      })
+  }
 
-    // ANSWER-SIZED PATH (r16 — the connectedComponents gate applied to
-    // the whole fold): the delta pairs, the touched-rep table, and the
-    // merge table are all delta-sized BY CONTRACT, and the distributed
-    // shape below already ships every one of them through driver-built
-    // broadcasts — so at or below the cap the ORCHESTRATION runs on the
-    // driver instead of through ~10 answer-sized jobs (per-shard fold
-    // cost is scheduling, not data: StreamCcProbe read the q228 fold at
-    // 7.6 s with a near-free fixpoint). The standing map keeps its scale
-    // contract exactly: ONE distributed broadcast-semi probe scan + ONE
-    // relabel scan, never shuffled, never collected. Over-cap deltas run
-    // the distributed shape below unchanged.
-    val session = deltaPairs.sparkSession
-    val cap = math.min(session.conf.get("graft.cc.driverEdgeCap", "100000").toLong,
-      (Int.MaxValue - 1).toLong)
-    val probe: Array[org.apache.spark.sql.Row] =
-      if (checkpointDir.isEmpty && cap > 0)
-        pairs0.select(col("id_a").cast("long"), col("id_b").cast("long"))
-          .limit(cap.toInt + 1).collect()
-      else null
-    if (probe != null && probe.length <= cap) {
-      import session.implicits._
-      val pairsArr = probe.map(r => (r.getLong(0), r.getLong(1)))
-      val endpoints = pairsArr.iterator
-        .flatMap(p => Iterator(p._1, p._2)).toArray.distinct.sorted
-      val rep = new scala.collection.mutable.LongMap[Long]()
-      endpoints.foreach(id => rep.update(id, id))
-      // the ONE standing probe scan: reps for the touched ids
-      val touched: Array[(Long, Long)] =
-        if (endpoints.isEmpty) Array.empty
-        else sm.join(broadcast(endpoints.toSeq.toDF("id")), Seq("id"), "left_semi")
-          .select(col("id").cast("long"), col("cluster_id").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-      touched.foreach { case (id, cl) => rep.update(id, cl) }
-      // min-rooted union-find over the rep graph (roots are component
-      // minima — the same invariant as the answer-sized CC path)
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r0 = x; while (parent(r0) != r0) r0 = parent(r0)
-        var c = x; while (c != r0) { val n = parent(c); parent.update(c, r0); c = n }
-        r0
-      }
-      pairsArr.foreach { case (a, b) =>
-        val (ra, rb) = (rep(a), rep(b))
-        if (ra != rb) {
-          if (!parent.contains(ra)) parent.update(ra, ra)
-          if (!parent.contains(rb)) parent.update(rb, rb)
-          val (fa, fb) = (find(ra), find(rb))
-          if (fa < fb) parent.update(fb, fa)
-          else if (fb < fa) parent.update(fa, fb)
-        }
-      }
-      val changedArr = parent.keys.toArray.sorted
-        .flatMap { r0 => val f = find(r0); if (f != r0) Some((r0, f)) else None }
-      val changedDf = changedArr.toSeq.toDF("rep", "new_rep")
-      val changedMap = changedArr.toMap
-      val touchedIds = touched.map(_._1).toSet
-      // fresh nodes (never in the map) relabel right here on the driver
-      val fromFreshLocal = endpoints.iterator
-        .filter(id => !touchedIds.contains(id))
-        .flatMap(id => changedMap.get(rep(id)).map(nr => (id, id, nr)))
-        .toSeq.toDF("node", "old_rep", "new_rep")
-      // …while the relabel stays ONE distributed standing-map scan
-      val fromStandingD = sm
-        .join(broadcast(changedDf), sm("cluster_id") === changedDf("rep"))
-        .select(sm("id").cast("long").as("node"),
-          sm("cluster_id").cast("long").as("old_rep"), col("new_rep"))
-      return fromStandingD.unionByName(fromFreshLocal)
-    }
+  /** The relabel both folds share: ONE standing-map scan joined against
+    * the broadcast merge table (rep, new_rep). */
+  private def relabel(sm: DataFrame, changed: DataFrame): DataFrame =
+    sm.join(broadcast(changed), sm("cluster_id") === changed("rep"))
+      .select(sm("id").as("node"), sm("cluster_id").as("old_rep"), col("new_rep"))
 
-    // All four landed intermediates below are LAZY checkpoints: each
-    // one's first consumer is a full scan (a distinct or a broadcast
-    // build), so the materialization rides that job instead of paying a
-    // separate eager job per table — four scheduling round-trips saved
-    // per delta fold, which is the dominant cost at answer-sized deltas.
-    val pairs = pairs0.localCheckpoint(false)
+  /** The answer-sized fold: the delta pairs, the touched-rep table and
+    * the merge table are delta-sized BY CONTRACT, so the orchestration
+    * runs on the driver instead of through ~10 answer-sized jobs. */
+  private def foldOnDriver(sm: DataFrame, rows: Array[Row]): DataFrame = {
+    val s = sm.sparkSession
+    import s.implicits._
+    val pairs = rows.map(r => (r.getLong(0), r.getLong(1)))
+    val endpoints = pairs.iterator
+      .flatMap(p => Iterator(p._1, p._2)).toArray.distinct.sorted
+    // the ONE standing probe scan: reps for the touched ids
+    val touched: Array[(Long, Long)] =
+      if (endpoints.isEmpty) Array.empty
+      else sm.join(broadcast(endpoints.toSeq.toDF("id")), Seq("id"), "left_semi")
+        .as[(Long, Long)].collect()
+    val rep = endpoints.map(id => id -> id).toMap ++ touched // fresh: itself
+    val uf = new UnionFind
+    pairs.foreach { case (a, b) => uf.union(rep(a), rep(b)) }
+    val changed = uf.labels.filter { case (r, m) => r != m }
+    val changedMap = changed.toMap
+    val touchedIds = touched.map(_._1).toSet
+    // fresh nodes (never in the map) relabel right here on the driver…
+    val fromFresh = endpoints.iterator
+      .filter(id => !touchedIds.contains(id))
+      .flatMap(id => changedMap.get(rep(id)).map(nr => (id, id, nr)))
+      .toSeq.toDF("node", "old_rep", "new_rep")
+    // …while the relabel stays ONE distributed standing-map scan
+    relabel(sm, changed.toSeq.toDF("rep", "new_rep")).unionByName(fromFresh)
+  }
+
+  /** The over-cap fold over the landed delta pairs. The landed
+    * intermediates are LAZY checkpoints: each one's first consumer is a
+    * full scan (a distinct or a broadcast build), so the materialization
+    * rides that job instead of paying a separate eager job per table. */
+  private def foldDistributed(sm: DataFrame, pairs: DataFrame,
+      checkpointDir: Option[String], cap: Int): DataFrame = {
     val endpoints = pairs.select(col("id_a").as("id"))
       .unionByName(pairs.select(col("id_b").as("id"))).distinct()
     // the standing map's reps for delta-touched ids: endpoint keys
@@ -886,23 +887,17 @@ object Dedup {
       .join(broadcast(epReps.select(col("id").as("id_a"), col("rep").as("ra"))), "id_a")
       .join(broadcast(epReps.select(col("id").as("id_b"), col("rep").as("rb"))), "id_b")
       .select(col("ra"), col("rb")).filter(col("ra") =!= col("rb")).distinct()
-    // the fixpoint over the delta-sized rep graph; reps whose label
-    // moves are exactly the merge events (answer-sized)
-    val changed = connectedComponents(repGraph, "ra", "rb",
-        checkpointDir = checkpointDir)
+    // components of the delta-sized rep graph; reps whose label moves
+    // are exactly the merge events (answer-sized)
+    val changed = connectedComponents(repGraph, "ra", "rb", 50, checkpointDir, cap)
       .filter(col("cluster_id") =!= col("id"))
       .select(col("id").as("rep"), col("cluster_id").as("new_rep"))
       .localCheckpoint(false)
-    // relabel: one standing-map scan against the broadcast merge table…
-    val fromStanding = sm
-      .join(broadcast(changed), sm("cluster_id") === changed("rep"))
-      .select(sm("id").as("node"), sm("cluster_id").as("old_rep"),
-        col("new_rep"))
-    // …plus the fresh nodes (never in the map): old label = themselves
+    // the fresh nodes (never in the map): old label = themselves
     val fromFresh = epReps
       .join(broadcast(smTouched.select(col("id"))), Seq("id"), "left_anti")
       .join(broadcast(changed), Seq("rep"))
       .select(col("id").as("node"), col("id").as("old_rep"), col("new_rep"))
-    fromStanding.unionByName(fromFresh)
+    relabel(sm, changed).unionByName(fromFresh)
   }
 }

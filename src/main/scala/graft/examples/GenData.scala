@@ -56,6 +56,11 @@ object GenData {
       (pmod(hash(col("id"), lit(salt)), lit(choices.size)) + 1).cast("int"))
 
   def main(args: Array[String]): Unit = {
+    // a flag such as --help must never become the output dir
+    if (args.exists(_.startsWith("-"))) {
+      System.err.println("usage: GenData [outDir] [scaleFactor]")
+      sys.exit(2)
+    }
     val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
     val sf = if (args.length > 1) args(1).toDouble else 1.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt

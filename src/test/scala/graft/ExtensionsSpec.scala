@@ -56,10 +56,6 @@ class ExtensionsSpec extends AnyFunSuite {
           (2L, "the quick brown fox jumps over the lazy dog end"),
           (3L, "completely different words in every single position here"))
         .toDF("doc_id", "text").createOrReplaceTempView("tf_docs")
-      val jj = spark.sql(
-        """SELECT id_a, id_b FROM graft_jaccard_join('tf_docs', 'text', 'doc_id', 0.7D)
-           ORDER BY id_a, id_b""").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(jj.toSeq == Seq((1L, 2L)))
 
       // repeated invocations over a FILE-backed table share ONE memoized
       // shingle projection (DedupCache keyed by the file-manifest
@@ -94,6 +90,13 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(runJJ() == Seq((1L, 2L), (1L, 4L), (2L, 4L)))
       assert(spark.sparkContext.getPersistentRDDs.size == persistedAfterFirst,
         "superseding a table version must unpersist the old projection, not strand it")
+      // the in-memory table runs after the storage counts above: its
+      // projection is a ContextCleaner-managed localCheckpoint that any GC
+      // may unpersist, which would shift those counts mid-check
+      val jj = spark.sql(
+        """SELECT id_a, id_b FROM graft_jaccard_join('tf_docs', 'text', 'doc_id', 0.7D)
+           ORDER BY id_a, id_b""").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(jj.toSeq == Seq((1L, 2L)))
 
       Seq((1L, 2L), (2L, 3L), (10L, 11L))
         .toDF("a", "b").createOrReplaceTempView("tf_pairs")

@@ -1054,51 +1054,85 @@ class PipelineSpec extends SparkSpec {
     assert(empty.columns.toSeq == Seq("id", "cluster_id") && empty.isEmpty)
   }
 
+  // Both sides of the connected-components size gate: cap 0 always runs
+  // distributed, cap 5 straddles the gate on the generated graphs, and the
+  // default cap solves everything here on the driver. Graphs come from a
+  // fixed-seed ScalaCheck generator; every other one carries int ids, so
+  // the long output schema is pinned for narrower inputs too.
+  private val gateCaps = Seq(0, 5, Dedup.DriverCap)
+  private def generated[T](g: org.scalacheck.Gen[T], n: Int): Seq[T] =
+    (0 until n).map(i => g.pureApply(org.scalacheck.Gen.Parameters.default,
+      org.scalacheck.rng.Seed(1234L + i)))
+  private def edgeGen(nodes: Int) = org.scalacheck.Gen.zip(
+    org.scalacheck.Gen.choose(0L, nodes.toLong), org.scalacheck.Gen.choose(0L, nodes.toLong))
+  private def longSchema(cols: String*) = org.apache.spark.sql.types.StructType(
+    cols.map(org.apache.spark.sql.types.StructField(_,
+      org.apache.spark.sql.types.LongType, nullable = false)))
+  private def narrowed(df: org.apache.spark.sql.DataFrame, i: Int) =
+    if (i % 2 == 0) df else df.select(df.columns.map(col(_).cast("int")): _*)
+
   test("deltaComponents: answer-sized driver fold ≡ distributed fold") {
     import graft.dedup.Dedup
-    // the r16 driver-orchestrated fold must agree row-for-row with the
-    // distributed shape (forced via cap=0) on merges, fresh chains, and
+    // the driver-orchestrated fold must agree row-for-row and schema-for-
+    // schema with the distributed shape on merges, fresh chains, and
     // stale pairs — same fixture class as the semantics test above
     val sm = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L),
-      (20L, 20L), (21L, 20L), (30L, 30L)).toDF("id", "cluster_id")
+      (20L, 20L), (21L, 20L), (30L, 30L))
     val rnd = new scala.util.Random(29)
-    val dp = (Seq((3L, 10L), (21L, 100L), (100L, 40L), (200L, 201L),
+    val dp = Seq((3L, 10L), (21L, 100L), (100L, 40L), (200L, 201L),
       (201L, 202L), (1L, 2L), (7L, 7L)) ++
-      Seq.fill(60)((rnd.nextInt(40).toLong * 7, rnd.nextInt(300).toLong)))
-      .toDF("id_a", "id_b")
+      Seq.fill(60)((rnd.nextInt(40).toLong * 7, rnd.nextInt(300).toLong))
+    // generated: a valid standing map (cluster_id = group minimum) over
+    // nodes 0..n and up to maxPairs delta pairs reaching 15 fresh ids past it
+    def caseGen(maxPairs: Int) = for {
+      n <- org.scalacheck.Gen.choose(1, 30)
+      groups <- org.scalacheck.Gen.listOfN(n + 1, org.scalacheck.Gen.choose(0, 8))
+      m <- org.scalacheck.Gen.choose(0, maxPairs)
+      pairs <- org.scalacheck.Gen.listOfN(m, edgeGen(n + 15))
+    } yield {
+      val members = groups.zipWithIndex.groupBy(_._1).values
+        .map(_.map(_._2.toLong))
+      (members.flatMap(ids => ids.map(i => (i, ids.min))).toSeq, pairs)
+    }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val local = rows(Dedup.deltaComponents(sm, dp))
-    spark.conf.set("graft.cc.driverEdgeCap", "0")
-    try assert(local == rows(Dedup.deltaComponents(sm, dp)))
-    finally spark.conf.unset("graft.cc.driverEdgeCap")
+    val cases = ((sm, dp) +: generated(caseGen(5), 2)) ++ generated(caseGen(12), 2)
+    // cap 5 sees both sides of the gate across the cases
+    assert(cases.map(_._2.count(p => p._1 != p._2) > 5).distinct.size == 2)
+    for (((smRows, dpRows), i) <- cases.zipWithIndex) {
+      val smDf = narrowed(smRows.toDF("id", "cluster_id"), i)
+      val dpDf = narrowed(dpRows.toDF("id_a", "id_b"), i)
+      val runs = gateCaps.map(cap => Dedup.deltaComponents(smDf, dpDf, None, cap))
+      val got = runs.map(rows)
+      assert(got.distinct.size == 1, s"case $i: ${gateCaps.zip(got)}")
+      runs.foreach(r => assert(r.schema == longSchema("node", "old_rep", "new_rep"),
+        s"case $i: ${r.schema}"))
+    }
   }
 
   test("connectedComponents: answer-sized union-find path ≡ distributed fixpoint") {
-    // r16: inputs at or below graft.cc.driverEdgeCap are solved with a
-    // driver union-find (the broadcast-build-side size contract) instead
-    // of the per-round fixpoint. Force the distributed path with cap=0 on
-    // the same graphs and assert label-for-label identity.
+    // inputs at or below the gate cap are solved with a driver union-find
+    // (the broadcast-build-side size contract) instead of the per-round
+    // fixpoint; every cap must give the same labels and the same schema
     val rnd = new scala.util.Random(13)
+    val graphGen = for {
+      n <- org.scalacheck.Gen.choose(1, 40)
+      m <- org.scalacheck.Gen.choose(0, 12)
+      edges <- org.scalacheck.Gen.listOfN(m, edgeGen(n))
+    } yield edges
     val cases = Seq(
       (0L until 120L).sliding(2).map(s => (s(0), s(1))).toSeq, // chain
-      Seq.fill(400)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)))
-    for (edges <- cases) {
-      val df = edges.toDF("a", "b")
-      val local = Dedup.connectedComponents(df, "a", "b")
-        .as[(Long, Long)].collect().toMap
-      val cap0 = spark.conf.getOption("graft.cc.driverEdgeCap")
-      spark.conf.set("graft.cc.driverEdgeCap", "0")
-      try {
-        val dist = Dedup.connectedComponents(df, "a", "b")
-          .as[(Long, Long)].collect().toMap
-        assert(local == dist)
-      } finally {
-        cap0 match {
-          case Some(v) => spark.conf.set("graft.cc.driverEdgeCap", v)
-          case None => spark.conf.unset("graft.cc.driverEdgeCap")
-        }
-      }
+      Seq.fill(400)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))) ++
+      generated(graphGen, 4)
+    assert(cases.map(_.collect { case (a, b) if a != b => (a min b, a max b) }
+      .distinct.size > 5).distinct.size == 2)
+    for ((edges, i) <- cases.zipWithIndex) {
+      val df = narrowed(edges.toDF("a", "b"), i)
+      val runs = gateCaps.map(cap => Dedup.connectedComponents(df, "a", "b", 50, None, cap))
+      val labels = runs.map(_.as[(Long, Long)].collect().toMap)
+      assert(labels.distinct.size == 1, s"case $i: ${gateCaps.zip(labels)}")
+      runs.foreach(r => assert(r.schema == longSchema("id", "cluster_id"),
+        s"case $i: ${r.schema}"))
     }
   }
 
@@ -1127,6 +1161,18 @@ class PipelineSpec extends SparkSpec {
         Seq(("a", "b")).toDF("a", "b"), "a", "b")
     }
     assert(ex.getMessage.contains("integral"))
+    // deltaComponents shares the contract: string ids in the pairs or in
+    // the standing map fail up front, on both sides of the gate
+    val smLong = Seq((1L, 1L)).toDF("id", "cluster_id")
+    val dpLong = Seq((1L, 2L)).toDF("id_a", "id_b")
+    for (cap <- Seq(0, Dedup.DriverCap);
+         (sm, dp) <- Seq((smLong, Seq(("1", "2")).toDF("id_a", "id_b")),
+           (Seq(("1", "1")).toDF("id", "cluster_id"), dpLong))) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.deltaComponents(sm, dp, None, cap)
+      }
+      assert(e.getMessage.contains("integral"), s"cap $cap: ${e.getMessage}")
+    }
   }
 
   test("PII redaction: per-class counts and in-place replacement") {
